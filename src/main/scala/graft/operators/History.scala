@@ -164,10 +164,10 @@ object History {
           java.util.concurrent.CompletableFuture.supplyAsync(() => collectStats())
         val merged =
           try tryMerge(lake, routed, batchId, epochKey,
-            () => statsFut.join(), rHandled = false)
+            () => Replay.joinUnwrapped(statsFut), rHandled = false)
           catch { case e: Throwable => statsFut.cancel(false); throw e }
         if (merged) return true
-        stats = statsFut.join() // aborted: R message or DML-empty batch
+        stats = Replay.joinUnwrapped(statsFut) // aborted: R message or DML-empty batch
       } else stats = collectStats()
 
       // R-message schema evolution, before the apply (north rule) — same

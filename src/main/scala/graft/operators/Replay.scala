@@ -44,14 +44,32 @@ object Replay {
     * on, AQE right-sizes the cached layout from actual bytes — few
     * partitions for a small micro-batch, full width for a large one. This
     * is the scale-ADAPTIVE fix (the non-adaptive alternative, a fixed
-    * repartition(n) before persist, would be tuned to one host). */
+    * repartition(n) before persist, would be tuned to one host).
+    *
+    * parallelPartitionDiscovery.threshold = Int.MaxValue: files are
+    * always listed on the driver, never by a Spark listing job with one
+    * task per root path (why the stream sources need it: CdcStream.start).
+    * The WAL and the lake are local files: a driver stat costs
+    * microseconds, a listing job about a second. */
   private val tunedSessions =
     java.util.Collections.newSetFromMap(
       new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
   private[graft] def tuneSession(spark: SparkSession): Unit =
-    if (tunedSessions.add(spark))
+    if (tunedSessions.add(spark)) {
       spark.conf.set(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        Int.MaxValue.toString)
+    }
+
+  /** `f.join()`, rethrowing the failure itself rather than its
+    * CompletionException wrapper: an overlapped job then fails with the
+    * same exception type as the sequential path. */
+  private[graft] def joinUnwrapped[T](f: java.util.concurrent.CompletableFuture[T]): T =
+    try f.join()
+    catch { case e: java.util.concurrent.CompletionException if e.getCause != null =>
+      throw e.getCause
+    }
 
   /** GRAFT_EXPLAIN=1: print `.explain("formatted")` of the named internal
     * frame to stdout between BEGIN/END markers (plan-evidence capture for
@@ -786,12 +804,12 @@ object Replay {
             val xfs = foldCatalyst()
             explain(s"replay-fold-batch$batchId", xfs)
             mergeApplyDeferred(lake, xfs, batchId, epochKey,
-              () => commitInfoOf(statsFut.join()))
+              () => commitInfoOf(joinUnwrapped(statsFut)))
           } catch { case e: Throwable =>
             statsFut.cancel(false); throw e
           }
         if (merged.isDefined) return true
-        stats = statsFut.join() // aborted: R message or empty batch
+        stats = joinUnwrapped(statsFut) // aborted: R message or empty batch
       } else stats = collectStats()
 
       val dml = stats.filter(s => s._2 != "R" && s._2 != "T")

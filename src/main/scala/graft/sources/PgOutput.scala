@@ -329,6 +329,10 @@ object PgOutput {
     * as one self-contained unit, and maxFilesPerTrigger is the same
     * batching knob.
     *
+    * The source lists its chunk files on the driver, not through a Spark
+    * listing job with one task per file on every trigger: see
+    * `CdcStream.start`.
+    *
     * The sid is REQUIRED: it is config data, not wire data (the reference
     * assigns it per source URL, `map.go:17-43`). The orchestrated path
     * re-stamps it per route (`CdcStream.Route.sidOverride`), so it passes
@@ -343,6 +347,7 @@ object PgOutput {
       System.err.println("[pgoutput] WARNING: readChunksStream with an " +
         s"empty sid over '$glob' — rows will carry sid='' unless every " +
         "route re-stamps it (CdcStream.Route.sidOverride)")
+    graft.operators.Replay.tuneSession(spark)
     // binaryFile's fixed schema, spelled out: the streaming source requires
     // an explicit schema (no inference pass over existing files)
     val binarySchema = StructType(Seq(

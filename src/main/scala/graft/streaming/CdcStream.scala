@@ -97,7 +97,15 @@ object CdcStream {
       LakeTable.load(spark, root).compact(maxFilesPerBucket = maxFilesPerBucket)
     }
 
-  /** @param format "parquet" (WAL-shaped parquet event log, default) or
+  /** Both sources list their files on the driver. The event-log glob
+    * expands to one root path per segment or chunk file, and past 32 root
+    * paths Spark's `InMemoryFileIndex` lists them with a distributed job,
+    * one task per path, in both `latestOffset` and `getBatch` of every
+    * trigger. [[Replay.tuneSession]] raises that threshold before the
+    * source is built (the stream clones its session at start, so a later
+    * setting would not reach it).
+    *
+    * @param format "parquet" (WAL-shaped parquet event log, default) or
     *               "pgoutput" (self-contained pgoutput chunk files decoded
     *               by graft.sources.PgOutput — same checkpoint-as-ack
     *               contract, each chunk file is one source unit) */
@@ -112,6 +120,7 @@ object CdcStream {
     import spark.implicits._
     val src = format match {
       case "parquet" =>
+        Replay.tuneSession(spark)
         spark.readStream
           .schema(ChangeEvent.schema)
           .option("maxFilesPerTrigger", maxFilesPerTrigger)

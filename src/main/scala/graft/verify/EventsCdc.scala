@@ -186,15 +186,27 @@ object EventsCdc {
     * Each WAL/segment render below writes its own directory, so the jobs
     * share nothing; the consumer globs the segments only after every
     * write returned. Job descriptions/configs are thread-local in Spark,
-    * so concurrent actions from a small pool are the supported pattern. */
-  private def inParallel(work: Seq[() => Unit]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(4, work.size)))
-    try work.map(w => pool.submit(new java.util.concurrent.Callable[Unit] {
-      def call(): Unit = w()
-    })).foreach(_.get())
-    finally pool.shutdown()
+    * so concurrent actions from a small pool are the supported pattern.
+    * The first job to fail (in completion order) interrupts the others;
+    * they have stopped when its own exception is rethrown. */
+  private[graft] def inParallel(work: Seq[() => Unit]): Unit = {
+    import java.util.concurrent._
+    val pool = Executors.newFixedThreadPool(math.max(1, math.min(4, work.size)))
+    val done = new ExecutorCompletionService[Unit](pool)
+    work.foreach(w => done.submit(() => w()))
+    try work.foreach(_ => done.take().get())
+    catch { case e: ExecutionException => throw e.getCause }
+    finally {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+    }
   }
+
+  /** Set a file's modification time, loudly: a silent failure would let
+    * FileStreamSource fall back to write-completion order. */
+  private[graft] def stampMtime(f: java.io.File, ms: Long): Unit =
+    if (!f.setLastModified(ms))
+      throw new IllegalStateException(s"cannot set the modification time of $f")
 
   /** Re-stamp segment files' modification times MONOTONICALLY in segment
     * order after the parallel writes return. FileStreamSource orders
@@ -208,7 +220,7 @@ object EventsCdc {
     val base = System.currentTimeMillis()
     segDirs.zipWithIndex.foreach { case (d, i) =>
       Option(d.listFiles()).toSeq.flatten
-        .foreach(_.setLastModified(base + i.toLong * 2000L))
+        .foreach(stampMtime(_, base + i.toLong * 2000L))
     }
   }
 
@@ -351,8 +363,8 @@ object EventsCdc {
     })
     locally {
       val base = System.currentTimeMillis()
-      (0 until Batches).foreach(b => new java.io.File(
-        f"$tmp/wal/chunk-$b%03d.bin").setLastModified(base + b.toLong * 2000L))
+      (0 until Batches).foreach(b => stampMtime(new java.io.File(
+        f"$tmp/wal/chunk-$b%03d.bin"), base + b.toLong * 2000L))
     }
     val lake = LakeTable.create(spark, s"$tmp/t", spec())
     val q = graft.streaming.CdcStream.start(spark, s"$tmp/wal/chunk-*.bin",

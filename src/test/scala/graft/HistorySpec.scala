@@ -287,4 +287,15 @@ class HistorySpec extends AnyFunSuite {
     assert(m.contains((1L, "merge", "closed", 2L)), s"got $m")
     assert(m.contains((1L, "merge", "soft_deleted", 1L)), s"got $m")
   }
+  test("history: a failed stats job surfaces as its own exception, not a " +
+    "CompletionException, and commits nothing") {
+    val spec = Transcripts.spec(numBuckets = 2)
+      .copy(schema = History.historySchema(Transcripts.schema))
+    val lake = LakeTable.create(spark, SparkTestBase.tmpDir("histstatsfail"), spec)
+    val v0 = lake.currentVersion
+    val e = intercept[Exception](History.applyBatch(lake,
+      SparkTestBase.statsFailingBatch(spark), mapping, 0))
+    SparkTestBase.assertStatsFailure(e)
+    assert(lake.currentVersion == v0)
+  }
 }

@@ -227,6 +227,43 @@ class PgOutputSpec extends AnyFunSuite {
     assert(lake.snapshot().properties("commit-epoch").toLong > epoch1)
   }
 
+  test("pgoutput stream lists its chunk files on the driver, without a " +
+    "listing job, past Spark's 32-path threshold") {
+    import graft.streaming.CdcStream
+    // a fresh session: the listing setting must come from the stream's own
+    // start, not from an earlier test's tuned session
+    val session = spark.newSession()
+    val dir = SparkTestBase.tmpDir("pgolist")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/wal"))
+    def chunk(name: String, i: Int): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/wal/$name"),
+        Wire.chunk(Seq(rel, Wire.begin(10L * (i + 1), i + 1),
+          Wire.insert(relId, Seq(Some(i.toString), Some(s"note $i"), Some("1"))),
+          Wire.commit(10L * (i + 1)))))
+    val chunks = 40
+    (0 until chunks).foreach(i => chunk(f"c-$i%03d.bin", i))
+    // an in-flight write: hidden, so never a source file
+    chunk(".tmp-c-999.bin", 999)
+    val spec = TableSpec("notes", StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("body", StringType, nullable = true),
+      StructField("n", IntegerType, nullable = true))),
+      keyCols = Seq("id"), bucketCols = Seq("id"), numBuckets = 4)
+    val lake = LakeTable.create(session, s"$dir/notes", spec)
+    val listings = SparkTestBase.jobsDuring(session,
+      "Listing leaf files and directories") {
+      CdcStream.runAvailable(session, s"$dir/wal/c-*.bin", s"$dir/ckpt",
+        Seq(CdcStream.Route(TableMapping("notes", "notes"), lake)),
+        maxFilesPerTrigger = chunks, format = "pgoutput")
+    }
+    assert(listings.isEmpty, s"listing jobs ran: ${listings.mkString("; ")}")
+    assert(lake.read().count() == chunks, "every chunk, and not the .tmp file")
+    val props = lake.snapshot().properties
+    assert(props("commit-epoch") == "0", "all chunks drain in one trigger")
+    assert(props("applied-ord-commit-epoch") ==
+      ((10L * chunks << 20) + 1).toString)
+  }
+
   test("chunks decode independently and apply through the engine end-to-end") {
     import spark.implicits._
     val dir = SparkTestBase.tmpDir("pgout")

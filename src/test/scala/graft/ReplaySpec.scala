@@ -232,4 +232,14 @@ class ReplaySpec extends AnyFunSuite {
     assert(tags.nonEmpty && tags.forall(t => t == null || t.endsWith("-text")),
       s"set literal '-text' must survive: ${tags.take(5).mkString(",")}")
   }
+  test("a failed stats job surfaces as its own exception, not a " +
+    "CompletionException, and commits nothing") {
+    val lake = LakeTable.create(spark, SparkTestBase.tmpDir("statsfail"),
+      Transcripts.spec(numBuckets = 2))
+    val v0 = lake.currentVersion
+    val e = intercept[Exception](Replay.applyBatch(lake,
+      SparkTestBase.statsFailingBatch(spark), TableMapping("transcripts", "transcripts"), 0))
+    SparkTestBase.assertStatsFailure(e)
+    assert(lake.currentVersion == v0)
+  }
 }

@@ -38,6 +38,37 @@ class StreamSpec extends AnyFunSuite {
     got.zip(want).foreach { case (g, w) => assert(g == w, s"\n engine=$g\n oracle=$w") }
   }
 
+  test("parquet stream lists its segments on the driver, without a listing " +
+    "job, past Spark's 32-path threshold") {
+    // a fresh session: the listing setting must come from the stream's own
+    // start, not from an earlier test's tuned session
+    val session = spark.newSession()
+    val cfg = Gen.Config(numEvents = 400, numConvs = 20, seed = 5)
+    val dir = SparkTestBase.tmpDir("streamlist")
+    val segs = 40
+    Gen.writeSegments(session, cfg, s"$dir/wal", segs, 0 until segs)
+    // an in-flight write inside a segment, holding later events: hidden,
+    // so the leaf listing must skip it
+    Gen.writeSegments(session, cfg.copy(numEvents = 800), s"$dir/later", 2, 1 until 2)
+    Files.move(Files.list(Paths.get(dir, "later", "seg-00001")).iterator.asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get,
+      Paths.get(dir, "wal", "seg-00000", ".tmp-part.parquet"))
+    val lake = LakeTable.create(session, s"$dir/transcripts", Transcripts.spec())
+    val listings = SparkTestBase.jobsDuring(session,
+      "Listing leaf files and directories") {
+      CdcStream.runAvailable(session, s"$dir/wal/seg-*", s"$dir/ckpt",
+        Seq(CdcStream.Route(mapping, lake)), maxFilesPerTrigger = segs)
+    }
+    assert(listings.isEmpty, s"listing jobs ran: ${listings.mkString("; ")}")
+    compare(lake, cfg, cfg.numEvents)
+    val props = lake.snapshot().properties
+    assert(props("commit-epoch") == "0", "all segments drain in one trigger")
+    val lastOrd = (0L until cfg.numEvents).map(Gen.mkEvent(_, cfg))
+      .filter(e => Set("I", "U", "D").contains(e.op))
+      .map(e => (e.lsn << 20) + e.seq * 2 + 1).max
+    assert(props("applied-ord-commit-epoch") == lastOrd.toString)
+  }
+
   test("stream: full replay via AvailableNow, resume, crash-window replay, late segments") {
     val cfg = Gen.Config(numEvents = 16000, numConvs = 150, seed = 21)
     val dir = SparkTestBase.tmpDir("stream")
